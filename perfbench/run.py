@@ -31,7 +31,9 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench")
 
-SETUPS = 3
+#: set-ups per run, each in a fresh JVM: a third would add ~9 s to every
+#: run and push a full set of runs towards the hour it must fit in
+SETUPS = 2
 
 
 def confine_to_checkout() -> None:
@@ -49,11 +51,9 @@ def confine_to_checkout() -> None:
 
 
 def start_sessions(trace: bool) -> tuple:
-    """Set the engine's session up ``SETUPS`` times: once cold (the JVM
-    starts) and then each time after a stop, and return the session with
-    the set-up times.  Their median is a warm set-up: the per-session
-    work of ``get_session()`` without the JVM launch, which only the cold
-    one pays.  Traced, ``get_session()`` runs as its two halves so
+    """Set the engine's session up ``SETUPS`` times, each in a fresh JVM
+    (the one before is shut down), and return the last session with the
+    set-up times.  Traced, ``get_session()`` runs as its two halves so
     session start and source registration are timed apart."""
     from sstable_hadoop_spark.plans import get_session, session_builder
     from sstable_hadoop_spark.sources.datasource import register
@@ -62,7 +62,7 @@ def start_sessions(trace: bool) -> tuple:
     spark = None
     for _ in range(SETUPS):
         if spark is not None:
-            spark.stop()
+            shutdown(spark)
         t0 = time.perf_counter()
         if trace:
             spark = session_builder().getOrCreate()
@@ -80,7 +80,7 @@ def start_sessions(trace: bool) -> tuple:
 
 def shutdown(spark) -> None:
     """Stop Spark and wait for the JVM (and with it the Python workers)
-    to exit."""
+    to exit; the next session launches a new JVM."""
     from pyspark import SparkContext
 
     gateway = SparkContext._gateway
@@ -89,6 +89,7 @@ def shutdown(spark) -> None:
         return
     proc = getattr(gateway, "proc", None)
     gateway.shutdown()
+    SparkContext._gateway = SparkContext._jvm = None
     if proc is not None:
         proc.stdin.close()              # the JVM exits when stdin closes
         try:
@@ -151,7 +152,6 @@ def main(argv=None) -> int:
         units = {m["name"]: m["unit"] for m in spec["per_layer"]}
         values = dict.fromkeys(units, 0)     # a layer not exercised reads 0
         values.update(res["layers"])
-        values["session.cold_start_s"] = setup[0]
         values["session.start_s"] = statistics.median(start)
         values["session.register_s"] = statistics.median(reg)
         values["mem.peak_rss_mb"] = rss.peak_bytes / 2**20
@@ -165,9 +165,10 @@ def main(argv=None) -> int:
                   "op_p50_s": res["op_p50_s"]}
     for p in ctx.problems:
         print(f"perfbench: FAILED {p}", file=sys.stderr)
-    for k in ("job_s", "op_s"):
+    for k, xs in (("setup_s", setup), ("job_s", res["job_s"]),
+                  ("op_s", res["op_s"])):
         print(f"perfbench: {k} samples " + " ".join(
-            f"{x:.3f}" for x in res[k]), file=sys.stderr)
+            f"{x:.3f}" for x in xs), file=sys.stderr)
     correct = ctx.failed == 0
     print(json.dumps({
         "correct": correct, "attempted": ctx.attempted,

@@ -45,8 +45,8 @@ PQ = {"m": 4, "k_codes": 16, "n_iter": 1}
 #: first runs of an operation in a fresh session: the first ``WARMUP``
 #: samples of each operation are checked but not reported
 WARMUP = 2
-REPS_MIN = 8
-LOOKUPS_MIN = 20
+REPS_MIN = 6
+LOOKUPS_MIN = 16
 MAX_FAILED = 4
 
 
@@ -57,9 +57,7 @@ MAX_FAILED = 4
 def prepare(workload: str, seed: int, cache_root: str) -> dict:
     """Generate the inputs and reference answers once per seed; later
     runs with the same seed reuse them."""
-    with open(gen.__file__, "rb") as f:
-        tag = hashlib.sha256(f.read()).hexdigest()[:10]   # new generator, new cache
-    d = os.path.join(cache_root, f"{workload}-s{seed}-{tag}")
+    d = os.path.join(cache_root, f"{workload}-s{seed}-{_input_tag()}")
     ref_path = os.path.join(d, "reference.pkl")
     if not os.path.exists(os.path.join(d, ".done")):
         shutil.rmtree(d, ignore_errors=True)
@@ -72,6 +70,23 @@ def prepare(workload: str, seed: int, cache_root: str) -> dict:
         ref = pickle.load(f)                  # written by _generate above
     ref["data"] = os.path.join(d, "data")
     return ref
+
+
+def _input_tag() -> str:
+    """Hash of the code that makes the inputs and references: the
+    generator, this module and the engine's writers (``sources``).  A
+    checkout with other writers gets its own cache entry, so each one
+    reads files its own writers produced."""
+    from sstable_hadoop_spark import sources
+
+    src = os.path.dirname(sources.__file__)
+    files = [gen.__file__, __file__] + sorted(
+        os.path.join(src, f) for f in os.listdir(src) if f.endswith(".py"))
+    h = hashlib.sha256()
+    for path in files:
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()[:10]
 
 
 def _generate(workload: str, seed: int, data: str) -> dict:
@@ -389,8 +404,6 @@ def run_fragmented_snapshot(ctx: Ctx, ref: dict) -> dict:
             t = time.perf_counter()
             files = fs.list_files(ref["data"], "-Data.db")
             list_s.append(time.perf_counter() - t)
-    blooms = {f: codec.BloomFilter(f.replace("-Data.db", "-Filter.db"))
-              for f in files}
     plan_s, pruned, admitted_hit = [], 0, []
     used = ref["lookups"][:len(lookups)]
     for key, want in used:
@@ -400,7 +413,7 @@ def run_fragmented_snapshot(ctx: Ctx, ref: dict) -> dict:
             reader.pushFilters([EqualTo(("key",), key)])
             parts = reader.partitions()
             plan_s.append(time.perf_counter() - t)
-        pruned += sum(not b.might_contain(key) for b in blooms.values())
+        pruned += len(files) - len({p.path for p in parts if p.path})
         if want:
             admitted_hit.append(sum(p.end - p.start for p in parts
                                     if p.path))
@@ -435,18 +448,6 @@ def _quantile(xs: list, q: float) -> float:
 # compaction
 # ---------------------------------------------------------------------------
 
-def _gc_filter(df, gc_before_ms: int):
-    """The purge ``compact(gc_before_ms=...)`` documents: tombstones
-    older than the cut-off and cells expired by it are dropped."""
-    from pyspark.sql import functions as F
-
-    return df.filter(~(
-        ((F.col("state") == "DELETED")
-         & (F.col("timestamp") < gc_before_ms * 1000))
-        | ((F.col("state") == "EXPIRING") & F.col("expiration").isNotNull()
-           & (F.col("expiration") <= gc_before_ms))))
-
-
 def _compaction_layers(ctx: Ctx, snap: dict) -> dict:
     """The write path on the fragmented snapshot: one ``compact()``
     (GC at the read time), then its parts apart -- the LWW merge on
@@ -455,7 +456,7 @@ def _compaction_layers(ctx: Ctx, snap: dict) -> dict:
     ref = {**snap, **compaction_reference(snap["seed"], snap["data"])}
     from pyspark.sql import functions as F
 
-    from sstable_hadoop_spark.operators.compaction import compact
+    from sstable_hadoop_spark.operators.compaction import _gc, compact
     from sstable_hadoop_spark.operators.lww import collect_rows, lww_cell
     from sstable_hadoop_spark.sources import codec
 
@@ -494,7 +495,7 @@ def _compaction_layers(ctx: Ctx, snap: dict) -> dict:
         if r:
             merges.append(r[0])
     nested = collect_rows(
-        _gc_filter(lww_cell(cached), gen.AS_OF_MS)
+        _gc(lww_cell(cached), gen.AS_OF_MS)
         .withColumn("generation", F.lit(ref["out_generation"]).cast("int")),
         by_generation=True).cache()
     nested.count()
