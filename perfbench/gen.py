@@ -56,7 +56,7 @@ SNAPSHOTS = {
     # an unconsolidated size-tiered snapshot: many small generations,
     # with enough dead cells for its compaction to drop
     "fragmented_snapshot": SnapshotSpec(
-        fmt="native", generations=32, keyspace=16_000, copies=2,
+        fmt="native", generations=16, keyspace=16_000, copies=2,
         names=10, tombstone=0.12, ttl=0.16),
 }
 

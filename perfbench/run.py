@@ -7,8 +7,9 @@ Usage (from the repository root):
 
 Generates the workload's inputs from ``--seed`` (cached under
 ``.perfbench/cache``), starts the engine's Spark session on
-``local[<all cores>]``, measures for ``--seconds`` seconds and checks every
-answer against the pure-Python reference.  The last line of standard output
+``local[<all cores>]``, warms each operation up, measures for at least
+``--seconds`` seconds and checks every answer against the pure-Python
+reference.  The last line of standard output
 is one JSON object: ``correct``, ``attempted``, ``failed`` and ``metrics``
 (the end-to-end metrics, or with ``--trace 1`` the per-layer ones; the
 traced run also writes its spans to ``.perfbench/out``).  Exits 1 when any
@@ -165,8 +166,8 @@ def main(argv=None) -> int:
                   "op_p50_s": res["op_p50_s"]}
     for p in ctx.problems:
         print(f"perfbench: FAILED {p}", file=sys.stderr)
-    for k, xs in (("setup_s", setup), ("job_s", res["job_s"]),
-                  ("op_s", res["op_s"])):
+    for k, xs in (("setup_s", setup), ("warmup_s", res["warmup_s"]),
+                  ("job_s", res["job_s"]), ("op_s", res["op_s"])):
         print(f"perfbench: {k} samples " + " ".join(
             f"{x:.3f}" for x in xs), file=sys.stderr)
     correct = ctx.failed == 0

@@ -8,17 +8,21 @@ per second) and one repeated *op* (reported as a median latency):
 workload              job -> ``job_items_per_s``                   op -> ``op_p50_s``
 ====================  ==========================================  ======================================
 cassandra_snapshot    cells/s: 1.x scan -> lww_cell -> live_view   full ``format=cassandra`` cell scan
-fragmented_snapshot   cells/s: full scan of 32 generations         ``filter(key == k)`` lookup
+fragmented_snapshot   cells/s: full scan of 16 generations         ``filter(key == k)`` lookup
 ====================  ==========================================  ======================================
 
 JIT compilation, code generation and Python worker start-up make the first
 runs of each operation in a fresh session slow (a cold 1.x scan takes five
-times a warm one), so the first ``WARMUP`` samples of each operation are
-checked but left out of the median.  The traced runs add what the
-end-to-end loop does not time: ``fragmented_snapshot`` compacts its
-snapshot (``compact()`` and the ``sstable`` sink, timed apart), and
-``cassandra_snapshot`` runs the corpus operators (MinHash dedup and PQ
-top-k) once over a generated corpus.
+times a warm one, and the JIT keeps speeding a reconcile up for several
+more), so each workload first warms up: its operations run a few times,
+checked but not timed into a metric.  The measured samples follow, the
+two operations interleaved, for at least ``--seconds`` seconds and at
+least a minimum count; each metric is the median of its samples.
+
+The traced runs add what the end-to-end loop does not time:
+``fragmented_snapshot`` compacts its snapshot (``compact()`` and the
+``sstable`` sink, timed apart), and ``cassandra_snapshot`` runs the corpus
+operators (MinHash dedup and PQ top-k) once over a generated corpus.
 
 Timed results go to a digest (row count plus a sum of per-row crc32) or
 are collected, so that every answer can be checked; the digest reads
@@ -28,6 +32,7 @@ every output column, as a ``noop`` write would.
 from __future__ import annotations
 
 import hashlib
+import itertools
 import os
 import pickle
 import shutil
@@ -42,11 +47,16 @@ import gen
 #: ``train_pq_codebooks`` settings for the corpus
 PQ = {"m": 4, "k_codes": 16, "n_iter": 1}
 #: JIT compilation, code generation and Python worker start-up slow the
-#: first runs of an operation in a fresh session: the first ``WARMUP``
-#: samples of each operation are checked but not reported
+#: first runs of an operation in a fresh session: ``fragmented_snapshot``
+#: first runs ``WARMUP`` rounds of a scan and a lookup, checked but not
+#: reported
 WARMUP = 2
-REPS_MIN = 6
-LOOKUPS_MIN = 16
+#: LWW merges over cached cells that warm ``cassandra_snapshot`` up
+MERGE_WARMUP = 5
+#: measured samples at least, past the warm-up: scans and reconciles
+REPS_MIN = 5
+#: lookups measured per scan in ``fragmented_snapshot``
+LOOKUPS_PER_SCAN = 3
 MAX_FAILED = 4
 
 
@@ -214,10 +224,6 @@ def _median(xs: list) -> float:
     return statistics.median(xs) if xs else 0.0
 
 
-def _warm_median(xs: list) -> float:
-    return _median(xs[WARMUP:])
-
-
 def _spark(tracer, spans: list, key: str) -> float:
     """Median over ``spans`` of a Spark stage metric, each span counted
     with its child spans (a child span's jobs carry the child's group)."""
@@ -250,6 +256,17 @@ def _until(ctx: Ctx, t0: float, reps: int, min_reps: int) -> bool:
     if ctx.failed > MAX_FAILED:
         return False
     return reps < min_reps or time.perf_counter() - t0 < ctx.seconds
+
+
+def _warm_up(ctx: Ctx, ops: list) -> list:
+    """Run each ``(name, fn, check)`` of ``ops`` in turn, checked like any
+    operation (spans named ``<name>.warmup``).  Returns the warm-up
+    times, for the log only."""
+    times = []
+    for name, fn, check in ops:
+        r = ctx.attempt(f"{name}.warmup", fn, check)
+        times.append(r[0] if r else float("nan"))
+    return times
 
 
 def _decode_s(partitions, decode) -> tuple[int, float]:
@@ -299,19 +316,33 @@ def run_cassandra_snapshot(ctx: Ctx, ref: dict) -> dict:
         counts["build_s"] = time.perf_counter() - t0
         return digest_of(df)
 
+    def scan(counts):
+        return digest_of(cells())
+
+    # One cold scan and reconcile, then the LWW merge over cached cells
+    # MERGE_WARMUP times: a reconcile's JIT-compiled aggregation keeps
+    # speeding up for ~10 reconciles of the files, and the cached merges
+    # (half a reconcile's time each) bring it near that speed sooner.
+    warm = _warm_up(ctx, [("scan", scan, _expect(ref["scan"])),
+                          ("reconcile", reconcile, _expect(ref["live"]))])
+    cached = cells().cache()
+    warm += _warm_up(ctx, [
+        ("cache_cells", lambda c: digest_of(cached), _expect(ref["scan"]))
+    ] + [("lww_merge", lambda c: digest_of(live_view(cached, gen.AS_OF_MS)),
+          _expect(ref["live"]))] * MERGE_WARMUP)
+    cached.unpersist(blocking=True)
     scans, recs = [], []
     t0 = time.perf_counter()
     while _until(ctx, t0, min(len(scans), len(recs)), REPS_MIN):
-        r = ctx.attempt("scan", lambda c: digest_of(cells()),
-                        _expect(ref["scan"]))
+        r = ctx.attempt("scan", scan, _expect(ref["scan"]))
         if r:
             scans.append(r[0])
         r = ctx.attempt("reconcile", reconcile, _expect(ref["live"]))
         if r:
             recs.append(r[0])
-    job_rate = ref["n_cells"] / _warm_median(recs) if recs else 0.0
-    out = {"job_items_per_s": job_rate, "op_p50_s": _warm_median(scans),
-           "job_s": recs, "op_s": scans}
+    job_rate = ref["n_cells"] / _median(recs) if recs else 0.0
+    out = {"job_items_per_s": job_rate, "op_p50_s": _median(scans),
+           "job_s": recs, "op_s": scans, "warmup_s": warm}
     if not ctx.trace:
         return out
 
@@ -374,22 +405,32 @@ def run_fragmented_snapshot(ctx: Ctx, ref: dict) -> dict:
              cells().filter(F.col("key") == F.lit(key)).collect()),
             key=_sort_key)
 
+    def scan(counts):
+        return digest_of(cells())
+
+    # the warm-up rounds take the last lookup keys, the measured ones the
+    # first
+    warm = []
+    for key, want in ref["lookups"][-WARMUP:]:
+        warm += _warm_up(ctx, [("scan", scan, _expect(ref["scan"])),
+                               ("lookup", lookup(key), _expect(want))])
+    measured = iter(ref["lookups"][:-WARMUP])
     scans, lookups = [], []
     t0 = time.perf_counter()
-    while _until(ctx, t0, len(scans), REPS_MIN) and len(scans) < REPS_MIN:
-        r = ctx.attempt("scan", lambda c: digest_of(cells()),
-                        _expect(ref["scan"]))
+    # rounds of one scan and LOOKUPS_PER_SCAN lookups, so both metrics
+    # sample the whole measured window
+    while _until(ctx, t0, min(len(scans), len(lookups) // LOOKUPS_PER_SCAN),
+                 REPS_MIN):
+        r = ctx.attempt("scan", scan, _expect(ref["scan"]))
         if r:
             scans.append(r[0])
-    for key, want in ref["lookups"]:
-        if not _until(ctx, t0, len(lookups), LOOKUPS_MIN):
-            break
-        r = ctx.attempt("lookup", lookup(key), _expect(want))
-        if r:
-            lookups.append(r[0])
-    job_rate = ref["n_cells"] / _warm_median(scans) if scans else 0.0
-    out = {"job_items_per_s": job_rate, "op_p50_s": _warm_median(lookups),
-           "job_s": scans, "op_s": lookups}
+        for key, want in itertools.islice(measured, LOOKUPS_PER_SCAN):
+            r = ctx.attempt("lookup", lookup(key), _expect(want))
+            if r:
+                lookups.append(r[0])
+    job_rate = ref["n_cells"] / _median(scans) if scans else 0.0
+    out = {"job_items_per_s": job_rate, "op_p50_s": _median(lookups),
+           "job_s": scans, "op_s": lookups, "warmup_s": warm}
     if not ctx.trace:
         return out
 
@@ -429,8 +470,8 @@ def run_fragmented_snapshot(ctx: Ctx, ref: dict) -> dict:
             pruned / (len(files) * len(used)) if used else 0.0,
         "datasource.bytes_admitted_per_hit": _median(admitted_hit),
         "codec.decode_cells_per_s": n / dec_s,
-        "lookup.p90_s": _quantile(lookups[WARMUP:], 0.9),
-        "lookup.count": len(lookups) - WARMUP,
+        "lookup.p90_s": _quantile(lookups, 0.9),
+        "lookup.count": len(lookups),
         **_scan_layers(ctx, "scan", dec_s),
         **_compaction_layers(ctx, ref),
         **_generic(ctx, "scan", "lookup", job_rate, out["op_p50_s"]),
